@@ -24,9 +24,17 @@ alternative. Tests must wait for the listener bus to drain
 from __future__ import annotations
 
 import logging
+import threading
 from datetime import datetime, timezone
 
+from ..session import gateway_no_delay
+
 logger = logging.getLogger(__name__)
+
+#: per callback thread: has its JVM-initiated py4j connection had Nagle
+#: turned off (session.gateway_no_delay)? Each plan's toJSON() reply comes
+#: back over that connection.
+_callback_thread = threading.local()
 
 
 class SQLFlowListener:
@@ -45,6 +53,9 @@ class SQLFlowListener:
 
     def onSuccess(self, funcName, qe, durationNs):  # noqa: N802 (Java name)
         try:
+            if not getattr(_callback_thread, "no_delay", False):
+                gateway_no_delay()
+                _callback_thread.no_delay = True
             jplan = qe.optimizedPlan()
             if "Command" in jplan.getClass().getName():
                 return  # INSERT/DDL lineage is a reference non-goal (Issue#5)
@@ -86,14 +97,22 @@ class SQLFlowListener:
         return id(self)
 
 
+def _start_callback_server(spark) -> None:
+    """Start py4j's callback server: the JVM listener bus calls back into
+    Python (same mechanism foreachBatch uses; without it the bus logs
+    "Connection refused"). Starting it replaces the JVM's py4j callback
+    client, and connections opened before that no longer resolve through
+    it, so Nagle comes off the calling thread's connection first."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    gateway_no_delay()
+    ensure_callback_server_started(spark.sparkContext._gateway)
+
+
 def register(spark, sink, output_dir: str, contracted: bool = False) -> SQLFlowListener:
     """Register a lineage listener on the session's listenerManager
     (reference README.md:237-240 programmatic registration)."""
-    from pyspark.java_gateway import ensure_callback_server_started
-
-    # the JVM listener bus calls back into Python — same mechanism
-    # foreachBatch uses; without this the bus logs "Connection refused"
-    ensure_callback_server_started(spark.sparkContext._gateway)
+    _start_callback_server(spark)
     listener = SQLFlowListener(sink, output_dir, contracted)
     spark._jsparkSession.listenerManager().register(listener)
     return listener
@@ -150,9 +169,7 @@ def register_from_conf(spark) -> SQLFlowListener | None:
         contracted = conf(f"{_NEO4J_CONF_PREFIX}.contracted", "false") == "true"
         # Neo4j appends straight over bolt — no output dir
         listener = SQLFlowListener(_Neo4jAppendAdapter(sink), "", contracted)
-        from pyspark.java_gateway import ensure_callback_server_started
-
-        ensure_callback_server_started(spark.sparkContext._gateway)
+        _start_callback_server(spark)
         spark._jsparkSession.listenerManager().register(listener)
         return listener
 

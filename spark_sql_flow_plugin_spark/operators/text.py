@@ -1317,7 +1317,10 @@ def bpe_train_merges(spark, sf_dir):
             vocab = vocab.localCheckpoint()
     # VALUES LocalRelation, not createDataFrame: the learned-merge table is
     # the query RESULT, and the RDD-parallelized form cost one 32-task
-    # ghost scan per consuming action (functions.exprs.local_values)
+    # ghost scan per consuming action (functions.exprs.local_values).
+    # VALUES cannot be empty: a corpus with no adjacent pair learns nothing.
+    if not learned:
+        return spark.createDataFrame([], "rank int, pair string, cnt bigint")
     return local_values(spark, learned, "rank int, pair string, cnt bigint")
 
 

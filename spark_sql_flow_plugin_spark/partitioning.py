@@ -61,7 +61,10 @@ def _byte_string_as_bytes(raw: str, default: int = 134217728) -> int:
     num, suffix = s[:i], s[i:].strip()
     if not num or suffix not in _BYTE_SUFFIXES:
         return default
-    return int(num) * _BYTE_SUFFIXES[suffix]
+    try:
+        return int(num) * _BYTE_SUFFIXES[suffix]
+    except ValueError:  # fractional ('1.5g') — byteStringAsBytes rejects it too
+        return default
 
 
 def _size_and_splits(spark: SparkSession, path: str) -> tuple:

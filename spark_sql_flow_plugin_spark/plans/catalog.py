@@ -32,28 +32,36 @@ def _jvm_preorder(jplan):
         yield from _jvm_preorder(children.apply(i))
 
 
-def _is_cached(spark, jplan) -> bool:
-    """Reference isCached (SQLFlow.scala:191-196). Spark 4.x moved
-    CacheManager.lookupCachedData to a two-arg (session, plan)
-    signature; the legacy single-arg py4j call raised and the old
-    blanket except returned False — so LIVE cached views were never
-    flagged (r15 catalog-DAG cache-stage fuzz find; the unit tests
-    exercised only the downstream flag plumbing). Try 4.x first, keep
-    the legacy form for older runtimes."""
+def _cache_probe(spark):
+    """A ``jplan -> bool`` cached-data test for one catalog pass — the
+    reference isCached (SQLFlow.scala:191-196). The cache manager is looked
+    up once; when nothing is cached every probe answers False without a
+    JVM call (a lookup costs 4 py4j calls, on every plan node).
+    Spark 4.x moved CacheManager.lookupCachedData to a two-arg (session,
+    plan) signature; the legacy single-arg py4j call raised and a blanket
+    except returned False — so LIVE cached views were never flagged (r15
+    catalog-DAG cache-stage fuzz find). Try 4.x first, keep the legacy form
+    for older runtimes."""
     try:
         jss = spark._jsparkSession
         cm = jss.sharedState().cacheManager()
+        if cm.isEmpty():
+            return lambda jplan: False
     except Exception:
+        return lambda jplan: False
+
+    def is_cached(jplan) -> bool:
+        for call in (
+            lambda: cm.lookupCachedData(jss, jplan),
+            lambda: cm.lookupCachedData(jplan),
+        ):
+            try:
+                return call().isDefined()
+            except Exception:
+                continue
         return False
-    for call in (
-        lambda: cm.lookupCachedData(jss, jplan),
-        lambda: cm.lookupCachedData(jplan),
-    ):
-        try:
-            return call().isDefined()
-        except Exception:
-            continue
-    return False
+
+    return is_cached
 
 
 def _alias_name(p: PlanNode) -> str | None:
@@ -100,7 +108,7 @@ def _blacklisted_for_hash_sub(p: PlanNode) -> bool:
 
 
 def _substitute_views(
-    spark, view_name: str, plan: PlanNode, jplan, hash_to_view: dict[int, str]
+    is_cached, view_name: str, plan: PlanNode, jplan, hash_to_view: dict[int, str]
 ) -> PlanNode:
     """Lockstep JSON/JVM walk over the ANALYZED view plan mirroring the
     reference's replaceWithTempViewNode (SQLFlow.scala:110-171):
@@ -120,7 +128,7 @@ def _substitute_views(
     (_splice_wrappers) and extract from the analyzed shape directly."""
 
     def rec(p: PlanNode, jp) -> PlanNode:
-        if _is_cached(spark, jp):
+        if is_cached(jp):
             p.raw["_cached"] = True
         if p.cls == "SubqueryAlias" and p.children:
             child = p.children[0]
@@ -206,35 +214,32 @@ def _splice_wrappers(p: PlanNode) -> PlanNode:
 def _list_view_names(spark) -> list[str]:
     """Every temp view + every database's permanent views (reference
     SQLFlow.scala:61-84 enumerates catalog.listDatabases × listTables and
-    keeps entries with a viewText, plus getTempViewNames)."""
+    keeps entries with a viewText, plus getTempViewNames). One
+    ``SessionCatalog.listViews`` call per database, which lists that
+    database's views and then the local temp views; the PySpark Catalog
+    API costs ~100 py4j calls for the same names. Permanent views are
+    ``db.view``, temp views bare, in listing order (the first view with a
+    given plan hash wins substitution, so the order matters)."""
+    jcat = spark._jsparkSession.sessionState().catalog()
     names: list[str] = []
     seen: set[str] = set()
-
-    def add(t) -> None:
-        name = (
-            t.name
-            if t.isTemporary or not t.namespace
-            else ".".join([*t.namespace, t.name])
-        )
-        if name not in seen:
-            seen.add(name)
-            names.append(name)
-
     try:
-        dbs = [d.name for d in spark.catalog.listDatabases()]
+        jdbs = jcat.listDatabases()
+        dbs = [jdbs.apply(i) for i in range(jdbs.size())]
     except Exception:
         dbs = []
     for db in dbs:
         try:
-            tables = spark.catalog.listTables(db)
+            idents = jcat.listViews(db, "*")
         except Exception:
             continue
-        for t in tables:
-            if t.tableType in ("TEMPORARY", "VIEW") or t.isTemporary:
-                add(t)
-    for t in spark.catalog.listTables():  # current-db + temp views safety net
-        if t.tableType in ("TEMPORARY", "VIEW") or t.isTemporary:
-            add(t)
+        for i in range(idents.size()):
+            ident = idents.apply(i)
+            jdb = ident.database()
+            name = f"{jdb.get()}.{ident.table()}" if jdb.isDefined() else ident.table()
+            if name not in seen:
+                seen.add(name)
+                names.append(name)
     return names
 
 
@@ -280,6 +285,7 @@ def catalog_lineage(
     from .catalyst import parse_plan_json
 
     views = _list_view_names(spark)
+    is_cached = _cache_probe(spark)
     plans = {}
     hash_to_view: dict[int, str] = {}
     for v in views:
@@ -296,7 +302,7 @@ def catalog_lineage(
     nodes: dict[str, GraphNode] = {}
     edges: list[GraphEdge] = []
     for v, (plan, jplan) in plans.items():
-        plan = _substitute_views(spark, v, plan, jplan, hash_to_view)
+        plan = _substitute_views(is_cached, v, plan, jplan, hash_to_view)
         plan = _splice_wrappers(plan)
 
         out_names = [name for name, _ in plan.output()]
@@ -306,7 +312,7 @@ def catalog_lineage(
             out_names,
             ", ".join(out_names),
             NodeType.VIEW,
-            is_cached=_is_cached(spark, jplan),
+            is_cached=is_cached(jplan),
         )
 
         if contracted:

@@ -42,13 +42,41 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def gateway_no_delay() -> None:
+    """Turn Nagle off on the JVM end of the calling thread's py4j connection.
+
+    The JVM writes a py4j reply in 8 KB chunks with Nagle on, and the
+    Python end delays its ACK, so every reply longer than 8 KB (a plan's
+    ``toJSON()``, for one) stalls ~40 ms waiting for that ACK: a 20 KB
+    string took 44 ms, 0.4 ms with TCP_NODELAY. py4j pins one connection
+    per Python thread (ClientServer), so this covers the calling thread
+    only; the lineage listener calls it on its callback thread. A no-op
+    unless the gateway is a py4j ClientServer, and for a connection opened
+    before py4j's callback server started (starting it replaces the JVM
+    callback client that resolves per-thread connections)."""
+    from py4j.clientserver import ClientServer
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if not isinstance(gateway, ClientServer):
+        return
+    try:
+        conn = gateway.java_gateway_server.getCallbackClient().getPerThreadConnection()
+        conn.getSocket().setTcpNoDelay(True)
+    except (AttributeError, Py4JError):  # no pinned connection (None) or a closed one
+        pass
+
+
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (e.g. the driver's)."""
+    """Apply runtime confs to an existing session (e.g. the driver's) and
+    take Nagle off the calling thread's gateway connection."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # immutable conf on this build — leave as-is
             pass
+    gateway_no_delay()
     return spark
 
 

@@ -235,8 +235,10 @@ def sessionize_gaps(spark, sf_dir):
         "event_id",
         "ts",
         "value",
+        # the exact interval, as the oracle compares it: a 1800.5 s gap
+        # opens a session (whole-second LONG differences would read 1800)
         F.when(
-            (F.col("ts").cast("long") - F.lag("ts").over(w).cast("long") > 1800)
+            (F.col("ts") > F.lag("ts").over(w) + F.expr("INTERVAL 30 MINUTES"))
             | F.lag("ts").over(w).isNull(),
             1,
         )

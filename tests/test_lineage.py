@@ -152,10 +152,31 @@ def test_catalog_mode_view_substitution(spark):
     assert "cat_v2" in seen, "cat_v1 must flow into cat_v2"
 
 
+def _catalog_api_view_names(s) -> list[str]:
+    """View names as the PySpark Catalog API enumerates them: every
+    database's listTables, views only, temp views bare, permanent views
+    namespace-qualified, first occurrence wins."""
+    names: list[str] = []
+    for db in [d.name for d in s.catalog.listDatabases()] + [None]:
+        tables = s.catalog.listTables(db) if db else s.catalog.listTables()
+        for t in tables:
+            if t.tableType in ("TEMPORARY", "VIEW") or t.isTemporary:
+                name = (
+                    t.name
+                    if t.isTemporary or not t.namespace
+                    else ".".join([*t.namespace, t.name])
+                )
+                if name not in names:
+                    names.append(name)
+    return names
+
+
 def test_catalog_mode_permanent_view(spark):
     """Permanent (metastore) views are enumerated alongside temp views
     (reference SQLFlow.scala:61-92), and leaf catalog tables carry a
     createTime prop (setPlanPropsIn, :288-314)."""
+    from spark_sql_flow_plugin_spark.plans.catalog import _list_view_names
+
     s = spark.newSession()
     s.sql("DROP VIEW IF EXISTS perm_v")
     s.sql("DROP TABLE IF EXISTS perm_base")
@@ -163,6 +184,14 @@ def test_catalog_mode_permanent_view(spark):
     try:
         s.sql("CREATE VIEW perm_v AS SELECT k, count(*) AS cnt FROM perm_base GROUP BY k")
         s.sql("CREATE OR REPLACE TEMP VIEW perm_tmp AS SELECT k FROM perm_base WHERE k > 0")
+        s.sql("CREATE OR REPLACE TEMP VIEW perm_atmp AS SELECT s FROM perm_base")
+        s.sql("CREATE DATABASE IF NOT EXISTS perm_db2")
+        s.sql("CREATE OR REPLACE VIEW perm_db2.perm_w AS SELECT k FROM default.perm_base")
+        # one JVM listing per database, same names in the same order as
+        # the Catalog API walk (hash substitution keeps the first view)
+        names = _list_view_names(s)
+        assert names == _catalog_api_view_names(s)
+        assert {"perm_tmp", "perm_atmp", "default.perm_v", "perm_db2.perm_w"} <= set(names)
         nodes, edges = extract(s, contracted=False)
         by_ident = {n.ident: n for n in nodes}
         views = {n.ident for n in nodes if n.tpe.value == "ViewNode"}
@@ -180,6 +209,8 @@ def test_catalog_mode_permanent_view(spark):
         perm_v_id = next(n.unique_id for n in nodes if "perm_v" in n.ident)
         assert any(e.to_id == perm_v_id for e in edges)
     finally:
+        s.sql("DROP VIEW IF EXISTS perm_db2.perm_w")
+        s.sql("DROP DATABASE IF EXISTS perm_db2")
         s.sql("DROP VIEW IF EXISTS perm_v")
         s.sql("DROP TABLE IF EXISTS perm_base")
 
